@@ -11,6 +11,17 @@ partition count change (rule of thumb: 2-3x total executor cores, and large
 enough that a shuffle partition stays under a few hundred MB at the target
 data size — for 100 TB inputs that means tens of thousands of partitions,
 which AQE coalesces back down when a stage's actual data is small).
+
+The generated-class cache (``spark.sql.codegen.cache.maxEntries``) is sized
+to the engine's working set, not left at Spark's 100. One warm pass over a
+handful of registered queries plus ``pipeline.run`` needs about 220 distinct
+generated classes, and one VersionedTable write round (upsert, merge_dv,
+delete, change-feed sync, reads, maintenance) about 175. The cache is an
+LRU, so a cycle longer than it evicts every class before its reuse: at 100
+entries each pass recompiles the same Java. It is a static, JVM-wide
+setting read at the first codegen, so a session built outside
+:func:`get_spark` (a plain ``SparkSession.builder``, a notebook) should set
+the same conf before its first query.
 """
 
 from __future__ import annotations
@@ -48,6 +59,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow for pandas_udf / applyInPandas / toPandas interchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Generated-class LRU: the working set is ~220 classes per warm
+        # pass of queries + pipeline.run and ~175 per table write round;
+        # at Spark's 100 every class is evicted before reuse and each pass
+        # recompiles. 2000 leaves room for several such working sets.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Runtime row-level join pruning: inject a bloom filter built from the
         # small/filtered side of a join into the big side's scan. At 100 TB
         # this skips reading most of a fact's rows when the dim side is

@@ -714,6 +714,49 @@ def test_change_feed_delete_and_schema_evolution(spark, table):
     assert rows == {("delete", 0): ("p0", None), ("delete", 1): ("p1", None)}
 
 
+@pytest.mark.parametrize("key_cols", [["k"], None])
+def test_change_feed_same_key_updated_in_two_commits(spark, table, key_cols):
+    """A key updated by two commits of one range yields two update pairs,
+    each under its own ``_commit_version``: the range-wide classification
+    joins on (version, key), never on the key alone (which would cross
+    the two commits' images into four bogus pairs)."""
+    table.commit(
+        spark.createDataFrame([Row(k=i, v=f"p{i}") for i in range(5)])
+    )                                                       # v0
+    table.merge(spark.createDataFrame([Row(k=1, v="A")]), ["k"])  # v1
+    table.merge(spark.createDataFrame([Row(k=1, v="B")]), ["k"])  # v2
+    feed = table.change_feed(key_cols, 0, 2)
+    assert sorted(
+        (r._commit_version, r._change_type, r.k, r.v) for r in feed.collect()
+    ) == [
+        (1, "update_postimage", 1, "A"),
+        (1, "update_preimage", 1, "p1"),
+        (2, "update_postimage", 1, "B"),
+        (2, "update_preimage", 1, "A"),
+    ]
+
+
+@pytest.mark.parametrize("key_cols", [["k"], None])
+def test_change_feed_range_is_one_full_outer_join(spark, table, key_cols):
+    """A multi-commit range (append, COW merge, DV delete, DV merge) is
+    classified by ONE full-outer join, not one per commit."""
+    table.commit(
+        spark.createDataFrame([Row(k=i, v=f"p{i}") for i in range(20)])
+    )                                                       # v0
+    table.commit(
+        spark.createDataFrame([Row(k=20, v="p20")]), mode="append"
+    )                                                       # v1
+    table.merge(spark.createDataFrame([Row(k=3, v="M")]), ["k"])  # v2
+    table.delete_where_dv("k", 10, 12)                      # v3
+    table.merge_dv(spark.createDataFrame([Row(k=5, v="D")]), ["k"])  # v4
+    feed = table.change_feed(key_cols, 0, 4)
+    plan = feed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join FullOuter") == 1
+    assert sorted(r._commit_version for r in feed.collect()) == [
+        1, 2, 2, 3, 3, 3, 4, 4,
+    ]
+
+
 def test_partition_evolution_old_files_kept_and_not_mispruned(spark, table):
     """Evolving the partition spec applies to NEW files only: old files
     are carried by reference (same paths, never rewritten), and pruning
