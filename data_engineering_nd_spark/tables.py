@@ -51,6 +51,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_nd_spark.io import local_frame
+
 _LOG = "_log"
 _DATA = "data"
 _DV = "_dv"
@@ -1193,7 +1195,7 @@ class VersionedTable:
             ]
         )
         if not files:
-            return self.spark.createDataFrame([], plain)
+            return local_frame(self.spark, [], plain)
         mapping = self._mapping(schema_json)
         paths = [os.path.join(self.root, f) for f in files]
         # Always read with the MANIFEST schema, not footer inference: a
@@ -1261,7 +1263,7 @@ class VersionedTable:
                     StructField("__pos", LongType(), True),
                 ]
             )
-            return self.spark.createDataFrame([], plain)
+            return local_frame(self.spark, [], plain)
         phys = StructType(
             [
                 StructField(
@@ -1299,10 +1301,8 @@ class VersionedTable:
             # NULL ids — their rewritten rows draw fresh ids from the
             # next commit's base range, a lazy backfill that keeps old
             # tables fully mutable
-        if not base_rows:
-            base_rows = [("", 0)]  # createDataFrame needs a schema seed
-        bmap = self.spark.createDataFrame(
-            base_rows, ["__fkey", "__base"]
+        bmap = local_frame(
+            self.spark, base_rows, "__fkey string, __base bigint"
         )
         df = df.join(F.broadcast(bmap), "__fkey", "left")
         sel = [
@@ -1433,7 +1433,8 @@ class VersionedTable:
             )
             for f in m["files"]
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "file string, size_bytes bigint, num_rows bigint, "
             "partition map<string,string>, partition_key string",
@@ -1453,7 +1454,8 @@ class VersionedTable:
             )
             for m in self.history()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "version bigint, operation string, num_files bigint, "
             "dv_files bigint, committed_at double",
@@ -2109,8 +2111,8 @@ class VersionedTable:
         bounds: dict[str, tuple] = {}
         if usable:
             if fields:
-                probe = self.spark.createDataFrame(
-                    [(lo,), (hi,)], _ST(fields)
+                probe = local_frame(
+                    self.spark, [(lo,), (hi,)], _ST(fields)
                 ).select(
                     *[
                         F.expr(expr).alias(name)
@@ -3283,8 +3285,10 @@ class VersionedTable:
             for i in range(k):
                 p = py_position(sval, i, mb)
                 probe_rows.append((r["file"], p // 32, 1 << (p % 32), i))
-        probe = self.spark.createDataFrame(
-            probe_rows, "file string, widx long, bit long, pos_id int"
+        probe = local_frame(
+            self.spark,
+            probe_rows,
+            "file string, widx long, bit long, pos_id int",
         )
         widxes = sorted({int(r[1]) for r in probe_rows})
         scan = sidecar
@@ -3704,7 +3708,8 @@ class VersionedTable:
             pruned = [f for f, mn, mx in bounds if mx < smin or mn > smax]
         if overlap and len(overlap) <= membership_cap:
             ktype = source.schema[key].dataType
-            bdf = self.spark.createDataFrame(
+            bdf = local_frame(
+                self.spark,
                 [(f, str(mn), str(mx)) for f, mn, mx in overlap],
                 "__mfile string, __mn string, __mx string",
             ).select(
@@ -4317,7 +4322,10 @@ class VersionedTable:
         ``Capstone/etl.py:445-448``, are the write side of this read).
         Every commit's images are tagged with ``_commit_version`` and the
         whole range is classified by ONE full-outer join on (version, key):
-        two exchanges per range, not two per commit.
+        two exchanges per range, not two per commit. Rewrite-only
+        maintenance commits (``compact``, ``optimize``) change no row, so
+        they are skipped, not read; a range holding only those returns the
+        typed empty frame without opening a file.
 
         Because copy-on-write rewrites whole files, a rewritten file's
         UNCHANGED survivor rows appear on both sides; a null-safe struct
@@ -4341,8 +4349,9 @@ class VersionedTable:
         post-images, position-stable under merge-on-read deletes. On a
         keyed fixture the two modes emit identical feeds (the gated
         ``tbl_row_tracking_report``); the keyless mode additionally
-        serves tables with NO natural key, and rewrite-only maintenance
-        commits feed ZERO rows because every survivor pairs with itself."""
+        serves tables with NO natural key. Both modes would pair every
+        survivor of a rewrite-only maintenance commit with itself and feed
+        ZERO rows for it, which is why such commits are skipped."""
         from functools import reduce
 
         from pyspark.sql.types import (
@@ -4369,9 +4378,16 @@ class VersionedTable:
         # under its final name instead of null-filling (and a renamed
         # key column keeps joining)
         fcur = StructType.fromJson(json.loads(mf[to_version]["schema"]))
-        if not span:  # empty range: typed empty frame, current schema
+        # compaction commits rewrite surviving rows unchanged (ids
+        # included): they feed nothing, so their images are not read.
+        # delete/delete-dv also rewrite, but they change rows.
+        span = [
+            v for v in span
+            if mf[v]["operation"].split("(")[0] not in ("compact", "optimize")
+        ]
+        if not span:  # nothing left: typed empty frame, current schema
             return (
-                self.spark.createDataFrame([], fcur)
+                local_frame(self.spark, [], fcur)
                 .withColumn("_change_type", F.lit(None).cast("string"))
                 .withColumn("_commit_version", F.lit(None).cast("bigint"))
             )

@@ -25,32 +25,37 @@ def test_oracle_keys_subset_of_queries():
 
 
 @pytest.fixture(scope="session")
-def query_sweep(spark):
-    """Run every registered query once at sf0.001 on a small driver
-    thread pool (guide §2.6) and cache (columns, rowcount-or-exception)
-    per query. The parametrized tests below then assert each query's
-    cached outcome, so the sweep costs one overlapped pass instead of
-    328 sequential runs — each query still executes exactly as before
-    (conf scopes are reference-counted, see catalog.scoped_conf) and a
-    failure is still reported against its own test id."""
+def query_sweep(spark, request):
+    """On first use, submit every ``test_query_runs`` case pytest selected
+    to a small driver thread pool (guide §2.6), and memoize one future of
+    (columns, exception-or-None) per query at sf0.001. ``-k q01`` runs
+    one query; a full run still overlaps all of them. Each query executes
+    exactly as it would alone (conf scopes are reference-counted, see
+    catalog.scoped_conf) and a failure is reported against its own test
+    id."""
     from concurrent.futures import ThreadPoolExecutor
 
     import __spark_entry__ as e
 
     qs = e.queries()
 
-    def run(item):
-        name, fn = item
+    def run(name):
         try:
-            df = fn(spark, SF_DIR)
+            df = qs[name](spark, SF_DIR)
             cols = list(df.columns)
             df.count()
-            return name, (cols, None)
+            return cols, None
         except Exception as ex:  # surfaced by the per-query test
-            return name, ([], ex)
+            return [], ex
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        return dict(pool.map(run, sorted(qs.items())))
+    selected = sorted(
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "function", None) is test_query_runs
+    )
+    pool = ThreadPoolExecutor(max_workers=4)
+    yield {name: pool.submit(run, name) for name in selected}
+    pool.shutdown(cancel_futures=True)
 
 
 @pytest.mark.parametrize(
@@ -59,7 +64,7 @@ def query_sweep(spark):
 )
 def test_query_runs(query_sweep, name):
     # every query must produce a stable schema and execute; most return rows
-    cols, err = query_sweep[name]
+    cols, err = query_sweep[name].result()
     if err is not None:
         raise err
     assert cols

@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
+import datetime
 import os
+import time
+import uuid
+from decimal import Decimal
+
+import pytest
 
 from data_engineering_nd_spark import io
 
@@ -420,3 +426,110 @@ def test_overwrite_partitions_respects_files_per_partition(spark, tmp_path):
         r.v for r in spark.read.parquet(path).filter("day = 'd1'").collect()
     )
     assert got == list(range(1000, 1200))
+
+
+# Every schema a table-format call site passes to ``io.local_frame``, with
+# representative rows (the range-probe site passes one column of the
+# partition source's type, hence the single-column cases).
+_LOCAL_FRAME_CASES = {
+    "rid_base_map": (
+        "__fkey string, __base bigint",
+        [("data/v0-a/part-0.parquet", 0), ("data/v1-b/part-0.parquet", 12)],
+    ),
+    "files_metadata": (
+        "file string, size_bytes bigint, num_rows bigint, "
+        "partition map<string,string>, partition_key string",
+        [("f0", 10, 2, {"g": "1", "h": "x"}, "g=1/h=x"), ("f1", 0, 0, {}, "")],
+    ),
+    "history_metadata": (
+        "version bigint, operation string, num_files bigint, "
+        "dv_files bigint, committed_at double",
+        [(0, "overwrite", 2, 0, 1.7e9), (1, "merge", 3, 1, 0.0)],
+    ),
+    "bloom_probe": (
+        "file string, widx long, bit long, pos_id int",
+        [("f0", 3, 1 << 31, 0), ("f0", 7, 1, 1)],
+    ),
+    "merge_bounds": (
+        "__mfile string, __mn string, __mx string",
+        [("f0", "1", "9"), ("f1", None, "2020-01-01")],
+    ),
+    "range_int": ("d int", [(-5,), (7,)]),
+    "range_double": ("d double", [(0.5,), (None,)]),
+    "range_date": (
+        "d date", [(datetime.date(2020, 1, 31),), (datetime.date(1969, 12, 31),)]
+    ),
+    "range_timestamp": (
+        "d timestamp",
+        [(datetime.datetime(2020, 1, 1, 12, 30, 1, 5),), (None,)],
+    ),
+    "range_decimal": (
+        "d decimal(12,2)", [(Decimal("1234.50"),), (Decimal("-0.01"),)]
+    ),
+    "zero_rows": ("k string, v bigint, m map<string,string>", []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LOCAL_FRAME_CASES))
+def test_local_frame_matches_list_path(spark, case):
+    """``local_frame`` keeps the declared schema (names, types,
+    nullability) and the values the ``createDataFrame(list)`` path gives."""
+    ddl, rows = _LOCAL_FRAME_CASES[case]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    want = spark.createDataFrame(rows, ddl)
+    got = io.local_frame(spark, rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_naive_timestamp_in_python_local_zone(spark, monkeypatch):
+    """Like the list path, a naive timestamp is read in the Python
+    process's zone, not the session's (UTC here)."""
+    rows = [(datetime.datetime(2020, 1, 1, 12, 30),)]
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        want = spark.createDataFrame(rows, "d timestamp")
+        got = io.local_frame(spark, rows, "d timestamp")
+        epoch = "cast(d as bigint) AS s"
+        assert got.selectExpr(epoch).collect() == want.selectExpr(epoch).collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_local_frame_keeps_struct_nullability_and_metadata(spark):
+    """A ``StructType`` schema is kept as declared: NOT NULL fields and
+    column-mapping metadata survive, with or without rows."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType(
+        [
+            StructField("k", LongType(), False, {"physical_name": "c1"}),
+            StructField("v", StringType(), True, {"field_id": 2}),
+        ]
+    )
+    for rows in ([], [(1, "a"), (2, None)]):
+        got = io.local_frame(spark, rows, schema)
+        assert got.schema == schema
+        assert [f.metadata for f in got.schema] == [f.metadata for f in schema]
+        assert [tuple(r) for r in got.collect()] == rows
+
+
+def test_local_frame_collect_runs_no_job(spark):
+    """A ``LocalRelation`` is answered on the driver: collecting it adds no
+    job to the status store, where the list path runs one."""
+    sc = spark.sparkContext
+    ddl, rows = _LOCAL_FRAME_CASES["merge_bounds"]
+
+    def jobs_for(build) -> list[int]:
+        group = f"local-frame-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_for(lambda: io.local_frame(spark, rows, ddl)) == []
+    assert jobs_for(lambda: spark.createDataFrame(rows, ddl)) != []

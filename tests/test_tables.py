@@ -757,6 +757,92 @@ def test_change_feed_range_is_one_full_outer_join(spark, table, key_cols):
     ]
 
 
+def _feed_rows(feed):
+    return sorted(tuple(r) for r in feed.collect())
+
+
+@pytest.mark.parametrize("op", ["optimize", "compact"])
+@pytest.mark.parametrize("key_cols", [["k"], None])
+def test_change_feed_skips_rewrite_only_commits(spark, table, key_cols, op):
+    """Compaction rewrites rows unchanged, so the feed skips such commits
+    instead of reading and joining both images: a range that ends in one
+    yields the rows of the range that ends just before it, and a range
+    holding only one returns no rows and scans no data file."""
+    table.commit(
+        spark.createDataFrame([Row(k=i, v=f"p{i}") for i in range(8)])
+    )                                                       # v0
+    table.commit(
+        spark.createDataFrame([Row(k=8, v="p8")]), mode="append"
+    )                                                       # v1
+    table.merge(spark.createDataFrame([Row(k=3, v="M")]), ["k"])  # v2
+    table.delete_where_dv("k", 5, 5)                        # v3
+    m = getattr(table, op)()                                # v4
+    assert m["version"] == 4 and m["operation"].startswith(op)
+    assert _feed_rows(table.change_feed(key_cols, 0, 4)) == _feed_rows(
+        table.change_feed(key_cols, 0, 3)
+    )
+    only = table.change_feed(key_cols, 3, 4)
+    assert only.columns == table.change_feed(key_cols, 2, 3).columns
+    assert only.collect() == []
+    plan = only._jdf.queryExecution().optimizedPlan().toString()
+    assert "parquet" not in plan.lower()
+
+
+def _rdd_leaves(plan: str) -> list[str]:
+    return [ln.strip() for ln in plan.splitlines() if "LogicalRDD [" in ln]
+
+
+def _collected_plans(monkeypatch, df) -> list[str]:
+    """Record the optimized plan of every frame collected from now on."""
+    plans: list[str] = []
+    cls = type(df)
+    collect = cls.collect
+
+    def recording(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording)
+    return plans
+
+
+def test_driver_side_frames_are_local_relations(spark, table, monkeypatch):
+    """The frames the table code builds from driver rows (the row-id base
+    map, the merge file-bounds table, the empty scans) are
+    ``LocalRelation`` leaves, never ``LogicalRDD``: reading one runs no
+    Python-worker stage."""
+    src = spark.range(20).select(
+        F.col("id").alias("k"), F.concat(F.lit("p"), "id").alias("v")
+    )
+    table.commit(src)
+    table.commit(src.where("k < 4").withColumn("k", F.col("k") + 20),
+                 mode="append")
+    m = table._manifest(1)
+    frames = [
+        table._scan_rid(m["files"], m),
+        table._scan_raw([], m["schema"]),
+        table._scan_rid([], m),
+    ]
+    for df in frames:
+        assert not _rdd_leaves(
+            df._jdf.queryExecution().optimizedPlan().toString()
+        )
+    plans = _collected_plans(monkeypatch, src)
+    table.merge(
+        spark.range(3, 5).select(
+            F.col("id").alias("k"), F.lit("M").alias("v")
+        ),
+        ["k"],
+    )
+    assert any("__mfile" in p for p in plans)  # the bounds frame ran
+    # merge localCheckpoints its source (a JVM-side LogicalRDD); the
+    # driver-row frames are told apart by their columns
+    assert not [
+        leaf for p in plans for leaf in _rdd_leaves(p)
+        if "__mfile" in leaf or "__base" in leaf
+    ]
+
+
 def test_partition_evolution_old_files_kept_and_not_mispruned(spark, table):
     """Evolving the partition spec applies to NEW files only: old files
     are carried by reference (same paths, never rewritten), and pruning
