@@ -24,23 +24,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    import __spark_entry__ as entry_mod
-    from data_engineering_nd_spark.session import get_spark
-
-    spark = get_spark(app_name="bench")
-    qs = entry_mod.queries()
-
-    # Warm the JVM so per-query numbers measure the queries, not session
-    # bootstrap: parquet footers, whole-stage codegen, the broadcast
-    # machinery, and the window-exec path all compile on first use and
-    # would otherwise be billed to whichever query happens to run first
-    # (r02 flagged a phantom 2x "regression" on i94_trips_build when the
-    # gate rotation moved it to the front of the run).
+def warmup(spark, sf_dir: str) -> None:
+    """Warm the JVM so per-query numbers measure the queries, not session
+    bootstrap: parquet footers, whole-stage codegen, the broadcast
+    machinery, and the window-exec path all compile on first use and
+    would otherwise be billed to whichever query happens to run first
+    (r02 flagged a phantom 2x "regression" on i94_trips_build when the
+    gate rotation moved it to the front of the run)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -67,6 +57,20 @@ def main() -> None:
     ).count()
     li.limit(256).mapInPandas(lambda it: it, schema=li.schema).count()
     li.limit(16).localCheckpoint().count()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    import __spark_entry__ as entry_mod
+    from data_engineering_nd_spark.session import get_spark
+
+    spark = get_spark(app_name="bench")
+    qs = entry_mod.queries()
+
+    warmup(spark, sf_dir)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}

@@ -2762,22 +2762,10 @@ def q69_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     4×1024 Count-Min Sketch over lineitem, probed with the same md5 hash
     family — estimates, and the never-underestimates guarantee, are
     value-hashed cross-engine."""
+    from data_engineering_nd_spark.functions.hashing import countmin_bucket
+
     d, w = 4, 1024
     li = load(spark, "lineitem", sf_dir)
-
-    def bucket(j: Column, key: Column) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(j.cast("string"), F.lit(":"), key.cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % w
-        )
 
     # Aggregate BEFORE hashing (guide §2.3): the sketch counts depend only
     # on each key's multiplicity, so one cheap codegen hash-agg reduces the
@@ -2789,7 +2777,11 @@ def q69_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j"),
         "l_suppkey",
         "n",
-    ).select("j", bucket(F.col("j"), F.col("l_suppkey")).alias("bucket"), "n")
+    ).select(
+        "j",
+        countmin_bucket(F.col("j"), F.col("l_suppkey"), w).alias("bucket"),
+        "n",
+    )
     cms = rows.groupBy("j", "bucket").agg(F.sum("n").alias("c"))
     top = (
         per_key.select("l_suppkey", F.col("n").alias("exact_n"))
@@ -2804,7 +2796,7 @@ def q69_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         "exact_n",
         "j",
-        bucket(F.col("j"), F.col("l_suppkey")).alias("bucket"),
+        countmin_bucket(F.col("j"), F.col("l_suppkey"), w).alias("bucket"),
     )
     return (
         F.broadcast(probes)

@@ -143,17 +143,6 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, base_dir: str | None = None) -> dict[str, DataFrame]:
-    return {name: load(spark, name, base_dir) for name in REGISTRY}
-
-
-def register_temp_views(spark: SparkSession, base_dir: str | None = None) -> None:
-    """Mirror of the reference's createOrReplaceTempView usage (etl.py:205...)
-    so every registered table is addressable from spark.sql."""
-    for name, df in load_all(spark, base_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Repartition up to cluster parallelism when a scan arrived as fewer
     splits (small/single-file tables), so CPU-heavy downstream kernels

@@ -26,10 +26,13 @@ def content_key(*cols: Column | str) -> Column:
     return F.xxhash64(*cs)
 
 
-def bucket_of(col: Column | str, n_buckets: int) -> Column:
-    """Uniform bucket id in [0, n_buckets) — e.g. for salting skewed keys."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
+def countmin_bucket(j: Column, key: Column, w: int) -> Column:
+    """Bucket of ``key`` in row ``j`` of a width-``w`` Count-Min Sketch:
+    the md5 hash family ``md5_prefix_long(j || ':' || key, 8) % w``, which
+    the DuckDB oracles mirror as ``CAST(concat('0x', substr(md5(...), 1,
+    8)) AS BIGINT) % w``."""
+    salted = F.concat(j.cast("string"), F.lit(":"), key.cast("string"))
+    return md5_prefix_long(salted, 8) % w
 
 
 def md5_prefix_long(col: Column | str, n_hex: int = 10) -> Column:

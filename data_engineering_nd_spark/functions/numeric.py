@@ -27,9 +27,3 @@ def round_half_up(col: Column, scale: int) -> Column:
 def round_half_up_long(col: Column) -> Column:
     """floor(x + 0.5) as BIGINT — integer round-half-up (non-negative)."""
     return F.floor(col + F.lit(0.5)).cast("long")
-
-
-def sql_round_half_up(expr: str, scale: int) -> str:
-    """The DuckDB-side mirror of :func:`round_half_up` for oracle strings."""
-    p = f"{float(10 ** scale):.1f}"
-    return f"floor(({expr}) * {p} + 0.5) / {p}"

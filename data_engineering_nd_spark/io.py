@@ -400,17 +400,16 @@ def overwrite_partitions(
     day's files atomically-enough while a year of sibling partitions
     survives. Spark's default (static) overwrite mode would instead
     DELETE THE ENTIRE TABLE first — at 100 TB that turns a one-partition
-    backfill into a full reload, which is why this helper scopes
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` around the
-    write rather than relying on session defaults someone may change.
+    backfill into a full reload, which is why this helper sets the
+    writer option ``partitionOverwriteMode=dynamic`` on this one write
+    rather than relying on (or mutating) the session-wide
+    ``spark.sql.sources.partitionOverwriteMode``.
 
     The audit row count rides on the write job via ``observe`` (same
     zero-extra-scan pattern as :func:`write`).
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
-
-    from data_engineering_nd_spark.catalog import scoped_conf
 
     if not partition_keys:
         raise ValueError("overwrite_partitions requires partition keys")
@@ -424,15 +423,13 @@ def overwrite_partitions(
         partition_keys,
         files_per_partition,
     )
-    with scoped_conf(
-        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    ):
-        (
-            observed.write.format("parquet")
-            .mode("overwrite")
-            .partitionBy(*partition_keys)
-            .parquet(path)
-        )
+    (
+        observed.write.format("parquet")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_keys)
+        .parquet(path)
+    )
     try:
         rows = int(obs.get["rows"])
     except Exception:

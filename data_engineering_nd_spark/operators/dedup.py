@@ -113,23 +113,6 @@ _MINHASH_AB = [
 ]
 
 
-def _derived_hash(h32: Column, i: int) -> Column:
-    a, b = _MINHASH_AB[i]
-    return (h32 * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)
-
-
-def minhash_signature(text_col: str | Column, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature as array<bigint>: for hash i, min over shingles of
-    g_i(xxhash64(shingle)). Column-level form (transform/array_min, stays in
-    codegen); the pairs operator below uses the equivalent explode +
-    hash-aggregate shape, which is the scalable one."""
-    sh = word_shingles(text_col, k=shingle_k)
-    h32s = F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(0xFFFFFFFF)))
-    return F.when(F.size(sh) == 0, F.lit(None)).otherwise(
-        F.array(*[F.array_min(F.transform(h32s, lambda h: _derived_hash(h, i))) for i in range(num_hashes)])
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

@@ -192,15 +192,6 @@ AUDIO_CHUNK_SCHEMA = (
 )
 
 
-def decode_audio(payload: bytes) -> "list[float]":
-    """Real decoder — requires an audio codec library not present in this
-    container. The Spark plumbing uses the deterministic byte-level fake."""
-    raise NotImplementedError(
-        "audio codecs unavailable in this environment; chunk_audio uses the "
-        "payload bytes as fake PCM"
-    )
-
-
 def chunk_audio(
     df: DataFrame, window_ms: int = 2000, hop_ms: int = 1000
 ) -> DataFrame:

@@ -64,20 +64,6 @@ def null_audit(df: DataFrame, cols: list[str], table: str = "") -> NullAuditResu
     )
 
 
-def check_tables(
-    spark: SparkSession,
-    pk_cols: dict[str, list[str]],
-    base_dir: str | None = None,
-) -> dict[str, NullAuditResult]:
-    """Run the full DQ suite over registered tables (the reference's
-    i94_data_quality_check.py main loop, without the triple recompute)."""
-    out = {}
-    for table, cols in pk_cols.items():
-        df = load(spark, table, base_dir)
-        out[table] = null_audit(df, cols, table=table)
-    return out
-
-
 def check_location(spark: SparkSession, path: str) -> dict:
     """Object-store-safe location DQ (S12): existence + non-empty listing
     through the Hadoop FS API, so the same check runs against file://,

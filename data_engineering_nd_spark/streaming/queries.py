@@ -56,7 +56,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-class _few_state_partitions:
+def _few_state_partitions(spark: SparkSession):
     """Temporarily clamp shuffle partitions while a stream starts.
 
     The number of state-store instances is fixed at stream start from
@@ -64,24 +64,13 @@ class _few_state_partitions:
     few thousand keys, so 32 stores are pure checkpoint overhead (~4x
     wall-clock on the stateful query). At production scale you size this
     to key cardinality instead — the conf is restored on exit either way.
+    scoped_conf reference-counts same-value overlaps, so streams started
+    from overlapping driver threads cannot restore it from under each
+    other.
     """
+    from data_engineering_nd_spark.catalog import scoped_conf
 
-    def __init__(self, spark: SparkSession, n: int = 8):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        # scoped_conf reference-counts same-value overlaps, so streams
-        # started from overlapping driver threads (test sweeps) cannot
-        # restore the conf out from under each other
-        from data_engineering_nd_spark.catalog import scoped_conf
-
-        self._cm = scoped_conf(
-            self.spark, "spark.sql.shuffle.partitions", str(self.n)
-        )
-        self._cm.__enter__()
-
-    def __exit__(self, *exc):
-        self._cm.__exit__(*exc)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", "8")
 
 
 def _run(df: DataFrame, name: str, spark: SparkSession) -> DataFrame:
@@ -1296,25 +1285,9 @@ def stream_heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     never-underestimates guarantee per (day, user): a lost micro-batch,
     a double-counted replay, or a hash-family drift between the
     streaming build and the probe all diverge. Batch sibling: q69."""
-    d, w = 4, 256
+    from data_engineering_nd_spark.functions.hashing import countmin_bucket
 
-    def bucket(j, key):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j.cast("string"), F.lit(":"), key.cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % w
-        )
+    d, w = 4, 256
 
     ev = with_watermark(read_events_stream(spark, sf_dir))
     grid = (
@@ -1324,7 +1297,9 @@ def stream_heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .select(
-            "ts", "j", bucket(F.col("j"), F.col("user_id")).alias("bucket")
+            "ts",
+            "j",
+            countmin_bucket(F.col("j"), F.col("user_id"), w).alias("bucket"),
         )
         .groupBy(F.window("ts", "1 day").alias("win"), "j", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1359,7 +1334,7 @@ def stream_heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("j"),
     ).select(
         "day", "user_id", "exact_n", "j",
-        bucket(F.col("j"), F.col("user_id")).alias("bucket"),
+        countmin_bucket(F.col("j"), F.col("user_id"), w).alias("bucket"),
     )
     return (
         probes.join(F.broadcast(cms), ["day", "j", "bucket"])

@@ -304,8 +304,11 @@ def test_overwrite_partitions_replaces_only_touched_days(spark, tmp_path):
     d1_files = sorted(os.listdir(os.path.join(path, "day=d1")))
 
     fix = spark.createDataFrame([(20, "d2"), (21, "d2")], "v long, day string")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
     res = overwrite_partitions(fix, path, ("day",))
     assert res.rows == 2
+    assert spark.conf.get(mode_key) == mode  # session conf left alone
 
     rows = spark.read.parquet(path).collect()
     by_day = {}

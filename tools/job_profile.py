@@ -31,8 +31,8 @@ def main() -> None:
     os.makedirs(evdir, exist_ok=True)
 
     import __spark_entry__ as entry_mod
+    from bench import warmup
     from data_engineering_nd_spark.session import get_spark
-    from tools.profile_query import warmup
 
     spark = get_spark(
         app_name="jobprofile",

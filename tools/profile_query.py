@@ -19,30 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def warmup(spark, sf_dir):
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    li.count()
-    (
-        li.join(F.broadcast(orders.limit(100)), li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)))
-        .collect()
-    )
-    li.limit(1000).select(F.row_number().over(Window.orderBy("l_orderkey"))).count()
-    li.dropDuplicates(["l_orderkey"]).limit(1).count()
-
-    def _ident(v):
-        return v
-
-    li.limit(256).select(F.pandas_udf(_ident, "double")(F.col("l_quantity"))).count()
-    li.limit(256).mapInPandas(lambda it: it, schema=li.schema).count()
-    li.limit(16).localCheckpoint().count()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -52,6 +28,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from bench import warmup
     from data_engineering_nd_spark.session import get_spark
 
     spark = get_spark(app_name="profile")
