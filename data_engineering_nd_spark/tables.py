@@ -48,7 +48,7 @@ import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_nd_spark.io import local_frame
@@ -2220,7 +2220,7 @@ class VersionedTable:
         prev = read_version
         if prev is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
-        candidates, untouched, _ = self.prune_files(col, lo, hi, prev)
+        candidates, _, _ = self.prune_files(col, lo, hi, prev)
         m = self._manifest(prev)
         version = prev + 1
         c = F.col(col)
@@ -2238,31 +2238,18 @@ class VersionedTable:
         stats: dict[str, dict] = {}
         prev_dv = m.get("dv") or []
         if candidates:
-            cand_stats = self._file_stats(candidates, m)
-            n_candidate_rows = sum(
-                cand_stats[f].get("num_rows", 0) for f in candidates
-            )
-            if prev_dv:
-                # footer counts include rows a DV already removed;
-                # subtract the candidates' DV entries (a metadata-sized
-                # sidecar read — stacked vectors are disjoint, so each
-                # dead row is counted once) instead of re-scanning the
-                # candidate data, keeping the rewrite the only
-                # candidate-file read
-                cand_keys = [self._dv_key(f) for f in candidates]
-                n_candidate_rows -= (
-                    self._dv_read(prev_dv)
-                    .filter(F.col("file").isin(cand_keys))
-                    .count()
-                )
-            # row tracking: survivors keep their ids across the rewrite
+            # row tracking: survivors keep their ids across the rewrite.
+            # One pass: the rewrite job is the only candidate-file read;
+            # the live candidate rows (after deletion vectors) are
+            # counted by an Observation riding it, the survivors by the
+            # new files' footers
+            ob = Observation()
             survivors = (
                 self._read_files_rid(candidates, m, prev_dv, strict=False)
+                .observe(ob, F.count(F.lit(1)).alias("live"))
                 .filter(keep)
                 .withColumnRenamed("__rid", "__row_id")
             )
-            # one pass: the rewrite job is the only candidate-file read;
-            # both report counts come from manifest + new-file footers
             written = self._write_files(
                 survivors, version, m["schema"]
             )
@@ -2270,7 +2257,7 @@ class VersionedTable:
             new_files = [f for f in written if wstats[f]["num_rows"] > 0]
             stats = {f: wstats[f] for f in new_files}
             n_rewritten = sum(wstats[f]["num_rows"] for f in written)
-            n_deleted = n_candidate_rows - n_rewritten
+            n_deleted = ob.get["live"] - n_rewritten
         # untouched files keep their deletion vectors (entries naming the
         # rewritten candidates go stale and match nothing) and their
         # partition values — both carried from the LATEST manifest by the
@@ -3645,35 +3632,64 @@ class VersionedTable:
         ]
         return StructType(fields).json()
 
+    @staticmethod
+    def _key_type(source: DataFrame, key: str, m: dict):
+        """The table's type of merge key ``key`` (the domain of its
+        manifest stats), else the source's. The stats prunes compare in
+        it, so a source key of another type (a string key against a
+        bigint column) is compared as a number, never as text or as
+        incomparable Python values."""
+        from pyspark.sql.types import StructType
+
+        fields = StructType.fromJson(json.loads(m["schema"])).fields
+        return next(
+            (f.dataType for f in fields if f.name == key),
+            source.schema[key].dataType,
+        )
+
+    @staticmethod
+    def _checkpoint_source(
+        source: DataFrame, key: str, m: dict
+    ) -> tuple[DataFrame, dict]:
+        """Materialize a merge verb's source ONCE: the caller's source is
+        an arbitrary lazy plan that every later step (stats pruning, the
+        match, the write) would otherwise re-execute, and an eager
+        ``localCheckpoint`` makes it batch-sized state (the upsert
+        contract is small batches, never a table-scale cache). The
+        first key's ``mn``/``mx`` (in :meth:`_key_type`) and the row
+        count ``n`` ride the same job through an ``Observation`` on the
+        checkpointed frame, so the stats prune and the report need no
+        job of their own."""
+        k = F.col(key).cast(VersionedTable._key_type(source, key, m))
+        ob = Observation()
+        source = source.observe(
+            ob,
+            F.min(k).alias("mn"),
+            F.max(k).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        ).localCheckpoint()
+        return source, ob.get
+
     def _merge_stat_candidates(
-        self, source: DataFrame, key: str, m: dict,
+        self, source: DataFrame, key: str, key_range: tuple, m: dict,
         membership_cap: int = 256,
     ) -> tuple[list[str], list[str]]:
-        """Stage-1 candidate selection for :meth:`merge` from manifest
-        stats alone — no table file is opened. Two escalating prunes:
+        """Candidate selection for the merge verbs from manifest stats
+        alone — no table file is opened. Two escalating prunes:
 
-        1. RANGE overlap (pure metadata): collect the source key's
-           [min, max] (one agg over the small batch) and drop every file
-           whose stats interval cannot overlap it — Delta/Iceberg's
+        1. RANGE overlap (pure metadata, in Python): drop every file
+           whose stats interval cannot overlap the source key's
+           ``key_range`` = (min, max), observed for free on the source
+           checkpoint (:meth:`_checkpoint_source`) — Delta/Iceberg's
            merge-condition pruning.
         2. INTERVAL membership (exact, still no table reads): a file
            survives only if at least one ACTUAL source key falls inside
            its [min, max]. Implemented as source-keys ⋈ broadcast(file
-           boundaries) — cost |source| x |surviving files|, so it only
-           runs when ≤ ``membership_cap`` files remain after stage 1
-           (at 100 TB stage 1 already cut the list to the overlap
-           neighborhood; nested-loop over an unbounded file list would
-           not scale).
-
-        When the table's whole stats-bearing file list already fits the
-        cap, stage 1's SEPARATE driver round-trip is skipped and the
-        range overlap rides the membership join itself: the broadcast
-        boundary table is filtered against the source's min/max inside
-        the same submitted job, so the nested loop still only sees
-        range-overlapping files but the merge pays one collect instead
-        of two (r14 opt). The (candidates, pruned) split is identical
-        either way — a file with no actual key hit is pruned by the
-        join whether or not its interval overlaps the source range.
+           boundaries), one collect — cost |source| x |surviving files|,
+           so it only runs when ≤ ``membership_cap`` files remain after
+           stage 1 (at 100 TB stage 1 already cut the list to the
+           overlap neighborhood; nested-loop over an unbounded file list
+           would not scale).
 
         Files with no recorded stats for ``key`` are always candidates
         (conservative — correctness never depends on stats existing).
@@ -3691,23 +3707,14 @@ class VersionedTable:
                 bounds.append((f, cs["min"], cs["max"]))
         if not bounds:
             return list(m["files"]), []
-        fused_range = len(bounds) <= membership_cap
-        if fused_range:
-            # skip stage 1's separate collect; the range prune rides
-            # the membership join's broadcast build below instead
-            overlap, pruned = list(bounds), []
-        else:
-            row = source.agg(
-                F.min(key).alias("mn"), F.max(key).alias("mx")
-            ).collect()[0]
-            smin, smax = row["mn"], row["mx"]
-            if smin is None:  # all-null source keys: nothing can match
-                return no_stats, [f for f, _, _ in bounds]
-            overlap = [(f, mn, mx) for f, mn, mx in bounds
-                       if not (mx < smin or mn > smax)]
-            pruned = [f for f, mn, mx in bounds if mx < smin or mn > smax]
+        smin, smax = key_range
+        if smin is None:  # empty or all-null source keys: nothing can match
+            return no_stats, [f for f, _, _ in bounds]
+        overlap = [(f, mn, mx) for f, mn, mx in bounds
+                   if not (mx < smin or mn > smax)]
+        pruned = [f for f, mn, mx in bounds if mx < smin or mn > smax]
         if overlap and len(overlap) <= membership_cap:
-            ktype = source.schema[key].dataType
+            ktype = self._key_type(source, key, m)
             bdf = local_frame(
                 self.spark,
                 [(f, str(mn), str(mx)) for f, mn, mx in overlap],
@@ -3717,25 +3724,11 @@ class VersionedTable:
                 F.col("__mn").cast(ktype).alias("__mn"),
                 F.col("__mx").cast(ktype).alias("__mx"),
             )
-            if fused_range:
-                # the range prune, folded into the broadcast build: the
-                # boundary table is filtered against the source's
-                # min/max INSIDE this job, so the nested loop below
-                # still iterates only range-overlapping files (a huge
-                # disjoint-range batch costs |files| interval checks,
-                # not |keys| x |files|) — but no separate driver
-                # round-trip ran for it
-                rng = source.agg(
-                    F.min(key).alias("__smn"), F.max(key).alias("__smx")
-                )
-                bdf = bdf.crossJoin(F.broadcast(rng)).where(
-                    (F.col("__mx") >= F.col("__smn"))
-                    & (F.col("__mn") <= F.col("__smx"))
-                ).select("__mfile", "__mn", "__mx")
+            # NULL keys satisfy no interval; the checkpointed keys need
+            # no distinct, the final distinct is over hit files
             hit = {
                 r["__mfile"]
-                for r in source.select(F.col(key).alias("__k"))
-                .dropna().dropDuplicates()
+                for r in source.select(F.col(key).cast(ktype).alias("__k"))
                 .join(
                     F.broadcast(bdf),
                     (F.col("__k") >= F.col("__mn"))
@@ -3747,52 +3740,144 @@ class VersionedTable:
             overlap = [t for t in overlap if t[0] in hit]
         return [f for f, _, _ in overlap] + no_stats, pruned
 
+    def _matched_rows(
+        self, source: DataFrame, key_cols: list[str], key_range: tuple,
+        m: dict,
+    ) -> tuple[list[str], list[str], DataFrame | None]:
+        """The match step every merge verb shares: stats-pruned
+        candidates (:meth:`_merge_stat_candidates`), then the matched
+        pre-images — candidate rows whose key is in ``source``, minus
+        rows a deletion vector already removed (their post-images were
+        already written) — as key columns, ``file``/``pos`` (the
+        deletion-vector identity, :meth:`_pos_key`) and ``__rid``.
+
+        Only key columns are scanned (column pruning keeps payloads
+        out); the broadcast source keys need no distinct (a semi-join
+        emits each row once). The result is match-count-sized and
+        ``localCheckpoint``ed, so the callers' affected-file collect,
+        deletion vector and row-id inheritance all read it without
+        re-scanning the table. Returns ``(candidates, pruned,
+        matched)``; ``matched`` is None when no file is a candidate."""
+        candidates, pruned = self._merge_stat_candidates(
+            source, key_cols[0], key_range, m
+        )
+        if not candidates:
+            return candidates, pruned, None
+        matched = (
+            self._scan_rid(candidates, m, strict=False)
+            .select(
+                *key_cols,
+                F.col("__fkey").alias("file"),
+                F.col("__pos").alias("pos"),
+                "__rid",
+            )
+            .join(
+                F.broadcast(source.select(*key_cols)),
+                on=key_cols,
+                how="left_semi",
+            )
+        )
+        prev_dv = m.get("dv") or []
+        if prev_dv:
+            matched = matched.join(
+                F.broadcast(self._dv_read(prev_dv)),
+                ["file", "pos"],
+                "left_anti",
+            )
+        return candidates, pruned, matched.localCheckpoint()
+
+    def _affected_files(
+        self, matched: DataFrame | None, m: dict
+    ) -> tuple[list[str], int]:
+        """The table files holding at least one matched pre-image, in
+        manifest order, and the matched pre-image count — one small
+        per-file collect over the :meth:`_matched_rows` checkpoint."""
+        if matched is None:
+            return [], 0
+        hits = dict(matched.groupBy("file").count().collect())
+        return (
+            [f for f in m["files"] if self._dv_key(f) in hits],
+            sum(hits.values()),
+        )
+
+    @staticmethod
+    def _inherit_ids(
+        df: DataFrame, matched: DataFrame, key_cols: list[str],
+        order_cols: list[str],
+    ) -> DataFrame:
+        """Row tracking for upserted rows: a source row whose key matched
+        INHERITS the matched pre-image's row id as ``__row_id`` (the
+        Delta MERGE contract — an update keeps its row id, so a keyless
+        change feed pairs its pre/post images); unmatched inserts carry
+        NULL and draw fresh ids from the commit's base range at read
+        time. ``min(__rid)`` per key: duplicate target keys (no
+        uniqueness constraint exists) must not MULTIPLY the source rows
+        — dup-key pre-images collapse into one post-image, which
+        inherits the smallest matched id. ``__hit`` marks matched rows;
+        with :meth:`_dedupe_inherited_ids`'s ``__first`` it counts the
+        matched keys (callers drop both)."""
+        old_ids = (
+            matched.groupBy(*key_cols)
+            .agg(F.min("__rid").alias("__row_id"))
+            .withColumn("__hit", F.lit(True))
+        )
+        return VersionedTable._dedupe_inherited_ids(
+            df.join(old_ids, on=key_cols, how="left"),
+            "__row_id",
+            key_cols,
+            order_cols,
+        )
+
+    @staticmethod
+    def _observe_matched_keys(df: DataFrame) -> tuple[DataFrame, Observation]:
+        """``df`` (the frame a write is about to run on) with the count
+        of matched KEYS — rows flagged ``__hit`` by :meth:`_inherit_ids`
+        that won their :meth:`_dedupe_inherited_ids` group — riding the
+        write as an ``Observation`` named ``keys``; the flag columns are
+        dropped. Observe the frame the action runs on: an Observation
+        registers with its frame's session, a ``foreachBatch`` source
+        lives in a cloned session, and an Observation on a frame of the
+        other session is never fulfilled (``get`` blocks forever)."""
+        ob = Observation()
+        df = df.observe(
+            ob,
+            F.count(F.when(F.col("__hit") & F.col("__first"), 1)).alias(
+                "keys"
+            ),
+        )
+        return df.drop("__hit", "__first"), ob
+
     @staticmethod
     def _dedupe_inherited_ids(
-        df: DataFrame, id_col: str, order_cols: list[str]
+        df: DataFrame, id_col: str, key_cols: list[str],
+        order_cols: list[str],
     ) -> DataFrame:
         """Keep each inherited row id on exactly ONE output row.
         Duplicate SOURCE keys multiply the post-images of one matched
         pre-image, and every copy would inherit the same id — breaking
         row-id lifetime uniqueness and making a later rewrite-only
         optimize emit phantom keyless change-feed updates (ADVICE r12).
-        The deterministic winner (smallest full-row hash, so reruns
-        pick the same post-image) keeps the id; the extras are set to
-        NULL and draw fresh ids from the commit's base range at read
-        time, i.e. they become plain inserts in the keyless feed.
 
-        Only rows whose id is ACTUALLY duplicated enter the window —
-        the usual unique-key batch broadcasts an empty duplicate set
-        and passes through with no window shuffle and no per-row JSON
-        hashing; the windowed side is bounded by the source batch's
-        duplicate multiplicity (and NULL-id plain inserts never enter:
-        a NULL partition would funnel them through one task)."""
+        One ``row_number`` window partitioned by (id, key columns),
+        ordered by the full-row hash of ``order_cols``: the first row of
+        each group (smallest hash, so reruns pick the same post-image)
+        keeps the id and the rest get NULL, i.e. they become plain
+        inserts in the keyless feed. An inherited id names one target
+        row, hence one key, so the winner is the one an id-only window
+        picks; the key columns spread NULL-id inserts across tasks
+        instead of funnelling them into one. Partitioning by key alone
+        would be wrong for :meth:`merge_when`: a target holding one key
+        several times carries several ids under that key, and each
+        keeps its own. The boolean ``__first`` marks each group's
+        winner; callers count with it and drop it."""
         from pyspark.sql.window import Window
 
-        dup_ids = (
-            df.where(F.col(id_col).isNotNull())
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .select(id_col)
-        )
-        # no broadcast HINT: the duplicate set is usually empty but is
-        # bounded only by the source batch's duplicate-key count — let
-        # AQE pick broadcast when it is small and degrade to a shuffle
-        # join when a pathological batch makes it large
-        clean = df.join(dup_ids, on=id_col, how="left_anti")
-        flagged = df.join(dup_ids, on=id_col, how="left_semi")
-        w = Window.partitionBy(id_col).orderBy(
+        w = Window.partitionBy(id_col, *key_cols).orderBy(
             F.xxhash64(F.to_json(F.struct(*order_cols)))
         )
-        deduped = (
-            flagged.withColumn("__id_rn", F.row_number().over(w))
-            .withColumn(
-                id_col, F.when(F.col("__id_rn") == 1, F.col(id_col))
-            )
-            .drop("__id_rn")
-        )
-        return clean.unionByName(deduped.select(*clean.columns))
+        return df.withColumn(
+            "__first", F.row_number().over(w) == 1
+        ).withColumn(id_col, F.when(F.col("__first"), F.col(id_col)))
 
     def merge(
         self, source: DataFrame, key_cols: list[str],
@@ -3805,22 +3890,31 @@ class VersionedTable:
         Three-stage blast-radius narrowing, mirroring delete_where:
 
         1. manifest-stats pruning (:meth:`_merge_stat_candidates`) —
-           metadata plus one pass over the SOURCE batch, zero table reads;
-        2. semi-join refinement: only stage-1 candidates have their key
-           columns scanned (column pruning keeps payloads out) to find
-           files that ACTUALLY contain a matched key — a stats interval
-           can cover a key that is absent from the file;
-        3. rewrite: refined files minus matched keys, plus the whole
-           source batch, written as the new version's files; everything
-           else carries over into the new manifest BY REFERENCE.
+           metadata plus the source key range observed on the source's
+           one materialization (:meth:`_checkpoint_source`), zero table
+           reads;
+        2. semi-join refinement (:meth:`_matched_rows`): only stage-1
+           candidates have their key columns scanned to find the
+           matched pre-images — a stats interval can cover a key that
+           is absent from the file — and one small per-file collect
+           names the files that ACTUALLY contain a matched key;
+        3. rewrite: those files minus matched keys, plus the whole
+           source batch (matched rows inheriting the pre-image's row
+           id), written as the new version's files in one job that
+           scans each affected file once; everything else carries over
+           into the new manifest BY REFERENCE.
 
         Returns the commit manifest extended with the merge report:
         ``files_pruned_by_stats``, ``files_refined_out``,
-        ``files_rewritten``, ``files_untouched``, ``rows_updated``,
-        ``rows_inserted`` (update/insert split assumes the batch carries
-        each key once — the upsert contract). At 100 TB a merge touching
-        0.1% of the key space costs metadata + a key-column scan of ~0.1%
-        of files + a rewrite of the same — never a table scan.
+        ``files_rewritten``, ``files_untouched``, ``rows_updated``
+        (matched KEYS: duplicate target keys collapse into one
+        post-image), ``rows_matched_preimages`` and ``rows_inserted``.
+        Every count comes from work the merge does anyway — the source
+        checkpoint, the per-file collect, an ``Observation`` on the
+        written frame — never from a job of its own. At 100 TB a merge
+        touching 0.1% of the key space costs metadata + a key-column
+        scan of ~0.1% of files + a rewrite of the same — never a table
+        scan.
 
         Optimistic concurrency (VERDICT r10 task #2): ``read_version``
         declares the basis snapshot; the commit goes through
@@ -3834,147 +3928,63 @@ class VersionedTable:
         prev = read_version
         if prev is None:
             return self.commit(source, mode="overwrite")
-        # the caller's source is an ARBITRARY lazy plan that merge would
-        # otherwise re-execute 4-5 times (stats agg, membership join, the
-        # key broadcast, the rewrite union); a lazy localCheckpoint
-        # materializes it exactly once, batch-sized — the upsert contract
-        # is small batches, so this is match-count-scale state, never a
-        # table-scale cache
-        source = source.localCheckpoint(eager=False)
         m = self._manifest(prev)
+        source, obs = self._checkpoint_source(source, key_cols[0], m)
         version = prev + 1
         self._enforce_table_checks(source, prev)
-
-        candidates, stat_pruned = self._merge_stat_candidates(
-            source, key_cols[0], m
+        candidates, stat_pruned, matched = self._matched_rows(
+            source, key_cols, (obs["mn"], obs["mx"]), m
         )
-        keys = source.select(*key_cols).dropDuplicates()
-        # input_file_name() returns a percent-encoded URI; decode it and
-        # match on BASENAMES (Spark part-file names embed a per-job UUID,
-        # so they are unique across the table) — string-comparing absolute
-        # paths breaks as soon as the table root needs URI escaping.
-        from urllib.parse import unquote, urlparse
-
-        prev_dv = m.get("dv") or []
-        affected_names = set()
-        if candidates:
-            # tag with _metadata.file_path BEFORE the DV anti-join:
-            # input_file_name() refuses plans with more than one file
-            # source, and the DV read is a second one
-            tagged = self._scan_raw(candidates, m["schema"]).withColumn(
-                "__file", F.col("_metadata.file_path")
-            )
-            if prev_dv:
-                tagged = self._apply_dv(tagged, prev_dv)
-            affected_names = {
-                os.path.basename(unquote(urlparse(r["__file"]).path))
-                for r in tagged.select("__file", *key_cols)
-                .join(F.broadcast(keys), on=key_cols, how="left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-        affected_rel = [
-            f for f in candidates if os.path.basename(f) in affected_names
-        ]
+        affected_rel, n_preimages = self._affected_files(matched, m)
         untouched = [f for f in m["files"] if f not in set(affected_rel)]
 
         # rewrite only the affected files, minus matched keys, plus source
         current_cols = [
             f["name"] for f in json.loads(m["schema"])["fields"]
         ] or source.columns
-        tgt = (
-            self._read_files_rid(affected_rel, m, prev_dv, strict=False)
-            if affected_rel
-            else None
-        )
-        survivors = (
-            tgt.join(
-                F.broadcast(keys), on=key_cols, how="left_anti"
-            ).withColumnRenamed("__rid", "__row_id")
-            if tgt is not None
-            else None
-        )
         incoming = source.select(*current_cols)  # align column order
-        # row tracking: matched source rows INHERIT the matched target
-        # row's id (the Delta MERGE contract — an update keeps its row
-        # id, so a keyless change feed pairs its pre/post images);
-        # unmatched inserts carry NULL and draw fresh ids from the
-        # commit's base range at read time
-        if tgt is not None:
-            # one id per key: duplicate target keys (no uniqueness
-            # constraint exists) must not MULTIPLY the joined source
-            # rows — the pre-row-tracking merge collapsed dup-key
-            # pre-images into one post-image, and that contract stands
-            # (the post-image inherits the smallest matched id)
-            old_ids = tgt.groupBy(*key_cols).agg(
-                F.min("__rid").alias("__row_id")
+        ob = None
+        if affected_rel:
+            survivors = (
+                self._read_files_rid(
+                    affected_rel, m, m.get("dv") or [], strict=False
+                )
+                .join(
+                    F.broadcast(source.select(*key_cols)),
+                    on=key_cols,
+                    how="left_anti",
+                )
+                .withColumnRenamed("__rid", "__row_id")
             )
-            incoming = self._dedupe_inherited_ids(
-                incoming.join(old_ids, on=key_cols, how="left"),
-                "__row_id",
-                current_cols,
+            incoming = self._inherit_ids(
+                incoming, matched, key_cols, current_cols
+            )
+            rewritten, ob = self._observe_matched_keys(
+                survivors.unionByName(incoming, allowMissingColumns=True)
             )
         else:
-            incoming = incoming.withColumn(
+            rewritten = incoming.withColumn(
                 "__row_id", F.lit(None).cast("long")
             )
-        rewritten = (
-            survivors.unionByName(incoming) if survivors is not None
-            else incoming
-        )
         new_files = self._write_files(rewritten, version, m["schema"])
-        stats = self._compute_stats(new_files)
         manifest = self._publish_mutation(
             read_version,
             f"merge(rewrote={len(affected_rel)},kept={len(untouched)})",
             added_files=new_files,
             added_sizes=self._file_sizes(new_files),
-            added_stats=dict(stats),
+            added_stats=self._compute_stats(new_files),
             removed=set(affected_rel),
             max_retries=max_retries,
         )
-        # blast-radius report, all from metadata + one source count:
-        # survivors = rewritten_rows - |source|; updated = affected_rows
-        # - survivors (the matched rows the rewrite dropped)
-        old_stats = self._file_stats(m["files"], m)
-        affected_rows = sum(
-            old_stats[f].get("num_rows", 0) for f in affected_rel
-        )
-        if prev_dv and affected_rel:
-            # footer counts include DV-deleted rows; subtract the
-            # affected files' DV entries (metadata-sized sidecar read,
-            # disjoint vectors) instead of re-scanning data
-            dv_keys = [self._dv_key(f) for f in affected_rel]
-            affected_rows -= (
-                self._dv_read(prev_dv)
-                .filter(F.col("file").isin(dv_keys))
-                .count()
-            )
-        n_source = source.count()
-        n_rewritten = sum(stats[f]["num_rows"] for f in new_files)
-        # matched pre-images (rows the rewrite dropped) can EXCEED the
-        # matched keys when the target held duplicates — the dup-key
-        # collapse writes one post-image per key, so rows_updated must
-        # count KEYS or rows_inserted goes negative (r12 self-review #2).
-        # old_ids is one row per affected-file key; the semi-join keeps
-        # the matched ones (a column-pruned, affected-files-sized job)
-        n_matched_keys = (
-            old_ids.join(
-                F.broadcast(keys), on=key_cols, how="left_semi"
-            ).count()
-            if tgt is not None
-            else 0
-        )
+        n_matched_keys = ob.get["keys"] if ob is not None else 0
         manifest.update(
             files_pruned_by_stats=len(stat_pruned),
             files_refined_out=len(candidates) - len(affected_rel),
             files_rewritten=len(affected_rel),
             files_untouched=len(manifest["files"]) - len(new_files),
             rows_updated=n_matched_keys,
-            rows_matched_preimages=affected_rows
-            - (n_rewritten - n_source),
-            rows_inserted=n_source - n_matched_keys,
+            rows_matched_preimages=n_preimages,
+            rows_inserted=obs["n"] - n_matched_keys,
         )
         return manifest
 
@@ -4038,40 +4048,16 @@ class VersionedTable:
         current_cols = [
             f["name"] for f in json.loads(m["schema"])["fields"]
         ] or source.columns
-        keys = source.select(*key_cols).dropDuplicates()
-
         if delete_not_matched_by_source_when is not None:
             affected_rel = list(m["files"])
         else:
-            candidates, _ = self._merge_stat_candidates(
-                source, key_cols[0], m
+            source, obs = self._checkpoint_source(source, key_cols[0], m)
+            _, _, pre = self._matched_rows(
+                source, key_cols, (obs["mn"], obs["mx"]), m
             )
-            from urllib.parse import unquote as _unq
-            from urllib.parse import urlparse as _urlp
-
-            affected_names = set()
-            if candidates:
-                tagged = self._scan_raw(
-                    candidates, m["schema"]
-                ).withColumn("__file", F.col("_metadata.file_path"))
-                if prev_dv:
-                    tagged = self._apply_dv(tagged, prev_dv)
-                affected_names = {
-                    os.path.basename(_unq(_urlp(r["__file"]).path))
-                    for r in tagged.select("__file", *key_cols)
-                    .join(F.broadcast(keys), on=key_cols, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-            affected_rel = [
-                f
-                for f in m["files"]
-                if os.path.basename(f) in affected_names
-            ]
+            affected_rel, _ = self._affected_files(pre, m)
         untouched = [f for f in m["files"] if f not in set(affected_rel)]
 
-        payload = [c for c in current_cols if c not in key_cols]
         tgt = self._read_files_rid(
             affected_rel, m, prev_dv, strict=False
         ).withColumn("__t", F.lit(1))
@@ -4135,8 +4121,9 @@ class VersionedTable:
                 )
             ).select(*out_cols),
             "__row_id",
+            key_cols,
             current_cols,
-        )
+        ).drop("__first")
         # persistent checks validate the rows actually WRITTEN (clause
         # filters may drop violating source rows — those are fine)
         self._enforce_table_checks(rewritten, prev)
@@ -4190,66 +4177,38 @@ class VersionedTable:
 
         Returns the commit manifest extended with
         ``files_candidates``, ``files_rewritten`` (always 0),
-        ``rows_updated`` (matched pre-images vectored),
-        ``rows_inserted`` and ``dv_files_total``. Optimistic concurrency
-        mirrors :meth:`merge` (VERDICT r10 task #2) with the candidate
-        files as the read set and the new vector attributed via
-        ``dv_refs``."""
+        ``rows_updated`` (matched KEYS), ``rows_vectored`` (matched
+        pre-image positions; more than the keys when the target holds
+        a key twice), ``rows_inserted`` and ``dv_files_total`` — the
+        vector and batch counts from the written files' footers, the
+        key count from an ``Observation`` on the appended frame, so no
+        count runs a job of its own. The source is materialized once
+        and matched through the same :meth:`_matched_rows` step as
+        :meth:`merge`. Optimistic concurrency mirrors :meth:`merge`
+        (VERDICT r10 task #2) with the candidate files as the read set
+        and the new vector attributed via ``dv_refs``."""
         if read_version is None:
             read_version = self.latest_version()
         prev = read_version
         if prev is None:
             return self.commit(source, mode="overwrite")
-        # one materialization of the caller's lazy source plan instead of
-        # a re-execution per consumer (same rationale as :meth:`merge`)
-        source = source.localCheckpoint(eager=False)
         m = self._manifest(prev)
+        source, obs = self._checkpoint_source(source, key_cols[0], m)
         version = prev + 1
-        prev_dv = m.get("dv") or []
         self._enforce_table_checks(source, prev)
-        candidates, _ = self._merge_stat_candidates(
-            source, key_cols[0], m
+        candidates, _, matched = self._matched_rows(
+            source, key_cols, (obs["mn"], obs["mx"]), m
         )
-        keys = source.select(*key_cols).dropDuplicates()
         n_matched = 0
         new_dv: list[str] = []
-        old_ids: DataFrame | None = None
-        if candidates:
-            # key columns + position identity + row id only — payload
-            # columns are pruned out of the scan
-            tagged = self._scan_rid(candidates, m, strict=False).select(
-                *key_cols,
-                F.col("__fkey").alias("file"),
-                F.col("__pos").alias("pos"),
-                "__rid",
-            )
-            matched = tagged.join(
-                F.broadcast(keys), on=key_cols, how="left_semi"
-            )
-            if prev_dv:
-                # rows a previous vector already deleted must not
-                # re-match (their post-images were already appended)
-                matched = matched.join(
-                    F.broadcast(self._dv_read(prev_dv)),
-                    ["file", "pos"],
-                    "left_anti",
-                )
-            # match-count-sized; materialized once, feeds both the DV
-            # write and the row-id inheritance join
-            matched = matched.localCheckpoint()
-            matches = matched.select("file", "pos")
-            # row tracking: the appended post-image of a matched key
-            # inherits the vectored pre-image's id (keyless CDF pairs
-            # them as one update); min() per key so duplicate target
-            # keys cannot multiply the appended batch
-            old_ids = matched.groupBy(*key_cols).agg(
-                F.min("__rid").alias("__row_id")
-            )
+        if matched is not None:
             rel_dir = os.path.join(
                 _DV, f"v{version:011d}-{uuid.uuid4().hex[:8]}"
             )
             out = os.path.join(self.root, rel_dir)
-            matches.repartition(1).write.mode("overwrite").parquet(out)
+            matched.select("file", "pos").repartition(1).write.mode(
+                "overwrite"
+            ).parquet(out)
             written = [
                 os.path.join(rel_dir, f)
                 for f in os.listdir(out)
@@ -4264,11 +4223,13 @@ class VersionedTable:
             f["name"] for f in json.loads(m["schema"])["fields"]
         ] or source.columns
         appended = source.select(*current_cols)
-        if old_ids is not None:
-            appended = self._dedupe_inherited_ids(
-                appended.join(old_ids, on=key_cols, how="left"),
-                "__row_id",
-                current_cols,
+        ob = None
+        if n_matched:
+            # the appended post-image of a matched key inherits the
+            # vectored pre-image's id (keyless CDF pairs them as one
+            # update)
+            appended, ob = self._observe_matched_keys(
+                self._inherit_ids(appended, matched, key_cols, current_cols)
             )
         else:
             appended = appended.withColumn(
@@ -4292,11 +4253,7 @@ class VersionedTable:
             dv_refs_new={d: cand_keys for d in new_dv},
             max_retries=max_retries,
         )
-        # rows_updated counts matched KEYS (old_ids is one row per
-        # matched key): duplicate target keys vector MORE positions than
-        # keys, and n_source - positions would go negative (r12
-        # self-review #2); the position count stays as rows_vectored
-        n_matched_keys = old_ids.count() if old_ids is not None else 0
+        n_matched_keys = ob.get["keys"] if ob is not None else 0
         manifest.update(
             files_candidates=len(candidates),
             files_rewritten=0,

@@ -180,6 +180,49 @@ def test_upsert_stream_sink_is_replay_idempotent(spark, tmp_path):
     assert snap.filter("event_id = 17 AND value = -1.0").count() == 1
 
 
+def test_merge_in_foreach_batch_reports_like_batch_merge(spark, tmp_path):
+    """merge inside foreachBatch (the source frame lives in a cloned
+    session) returns the same report as a batch merge of the same rows:
+    its counts ride Observations, which only the session that runs the
+    action fulfils — a wrong session would block the batch forever, so
+    the stream is awaited with a timeout."""
+    from pyspark.sql import Row
+
+    from data_engineering_nd_spark.tables import VersionedTable
+
+    base = spark.createDataFrame([Row(k=i, v=f"b{i}") for i in range(10)])
+    rows = spark.createDataFrame([Row(k=i, v=f"s{i}") for i in range(5, 15)])
+    src_dir = str(tmp_path / "src")
+    rows.write.parquet(src_dir)
+    streamed = VersionedTable(spark, str(tmp_path / "streamed"))
+    batch = VersionedTable(spark, str(tmp_path / "batch"))
+    streamed.commit(base)
+    batch.commit(base)
+    reports = []
+    q = (
+        spark.readStream.schema(rows.schema).parquet(src_dir)
+        .writeStream.foreachBatch(
+            lambda df, _id: reports.append(streamed.merge(df, ["k"]))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "foreachBatch merge did not finish"
+    finally:
+        q.stop()
+    assert q.exception() is None
+    want = batch.merge(spark.read.parquet(src_dir), ["k"])
+    fields = ("rows_updated", "rows_inserted", "rows_matched_preimages")
+    assert len(reports) == 1
+    assert [reports[0][f] for f in fields] == [want[f] for f in fields]
+    assert [want[f] for f in fields] == [5, 5, 5]
+    assert sorted(streamed.snapshot().collect()) == sorted(
+        batch.snapshot().collect()
+    )
+
+
 def test_sliding_counts_double_count_events(spark):
     """2h windows sliding by 1h: every event lands in exactly two windows,
     so the sliding inventory's event mass is exactly 2x the table's."""

@@ -542,6 +542,53 @@ def test_merge_report_phantom_refined_out(spark, chunked_table):
     assert got[25] == "back" and got[33] == "U33"
 
 
+def test_merge_rewrite_scans_each_affected_file_once(
+    spark, chunked_table, monkeypatch
+):
+    """The frame COW merge writes reads the table's data files ONCE:
+    survivors come from one scan of the affected file, and the inherited
+    row ids come from the checkpointed matched pre-images, not from
+    re-scans of that file."""
+    t = chunked_table
+    t.delete_where_dv("k", 15, 15)  # a deletion vector on the chunk too
+    written = []
+    write = VersionedTable._write_files
+
+    def capture(self, df, *a, **kw):
+        written.append(df)
+        return write(self, df, *a, **kw)
+
+    monkeypatch.setattr(VersionedTable, "_write_files", capture)
+    m = t.merge(
+        spark.createDataFrame([Row(k=12, v="U12"), Row(k=100, v="n")]),
+        ["k"],
+    )
+    assert m["files_rewritten"] == 1 and m["rows_updated"] == 1
+    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
+    # table data scans read the key; the deletion-vector sidecar reads
+    # (file, pos) and the checkpointed source is an RDD scan
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "ReadSchema: struct<k:" in ln
+    ]
+    assert len(scans) == 1, plan
+
+
+def test_merge_string_source_key_prunes_in_table_type(spark, table):
+    """A source key typed differently from the table's (string against
+    bigint) is range- and membership-pruned in the TABLE's type: as
+    text, "7" lies outside the file's ["5", "20"], so the file would be
+    pruned and the row inserted a second time instead of updated."""
+    table.commit(
+        spark.createDataFrame([Row(k=i, v="a") for i in range(5, 21)])
+        .repartition(1)
+    )
+    m = table.merge(spark.createDataFrame([Row(k="7", v="u")]), ["k"])
+    assert (m["files_rewritten"], m["rows_updated"], m["rows_inserted"]) \
+        == (1, 1, 0)
+    assert [r.v for r in table.snapshot().where("k = 7").collect()] == ["u"]
+
+
 def test_merge_all_null_source_keys_inserts_only(spark, chunked_table):
     t = chunked_table
     src = spark.createDataFrame(
@@ -2996,6 +3043,30 @@ def test_merge_with_duplicate_source_keys_keeps_ids_unique(spark, table):
     assert len(ids) == len(set(ids))
     table.optimize(min_file_bytes=1 << 40, target_files=1)  # v6
     assert table.change_feed(None, 5, 6).count() == 0
+
+    # merge_when with duplicate TARGET keys and one source row: both
+    # matched target rows are updated, and each keeps its OWN id (the
+    # dedupe window is per (id, key), not per key)
+    table.commit(
+        spark.createDataFrame([Row(k=8, v=1), Row(k=8, v=2)]),
+        mode="append",
+    )  # v7
+
+    def ids_of(version, k):
+        m = table._manifest(version)
+        return sorted(r.rid for r in table._read_files_rid(
+            m["files"], m, m.get("dv") or []
+        ).where(F.col("k") == k).select(F.col("__rid").alias("rid"))
+            .collect())
+
+    before = ids_of(7, 8)
+    rep = table.merge_when(
+        spark.createDataFrame([Row(k=8, v=99)]), ["k"]
+    )  # v8
+    assert rep["rows_updated"] == 2
+    assert ids_of(8, 8) == before and len(set(before)) == 2
+    assert sorted(r.v for r in table.snapshot().where("k = 8").collect()) \
+        == [99, 99]
 
 
 def test_zorder_surrogates_string_date_timestamp():

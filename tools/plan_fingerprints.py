@@ -17,8 +17,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tests",

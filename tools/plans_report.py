@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 HEADLINERS = [
     "q01_pricing_summary",
@@ -379,7 +381,7 @@ def main() -> None:
         lines.append(plan.strip())
         lines.append("```")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(HEADLINERS)} queries)")
 

@@ -12,11 +12,12 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

@@ -16,8 +16,9 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
