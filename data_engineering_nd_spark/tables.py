@@ -48,7 +48,7 @@ import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_nd_spark.io import local_frame
@@ -3791,20 +3791,58 @@ class VersionedTable:
     ) -> tuple[list[str], int]:
         """The table files holding at least one matched pre-image, in
         manifest order, and the matched pre-image count — one small
-        per-file collect over the :meth:`_matched_rows` checkpoint."""
+        per-file collect over the :meth:`_matched_rows` checkpoint.
+        ``file`` comes from ``_metadata.file_path``, a URI, so it is
+        percent-decoded before it is compared with the manifest's raw
+        paths (a hive-escaped partition directory such as
+        ``p_ts=2020-01-01 00%3A00%3A00`` appears there as
+        ``...%2000%253A00...``)."""
         if matched is None:
             return [], 0
-        hits = dict(matched.groupBy("file").count().collect())
+        hits = {
+            unquote(f): n
+            for f, n in matched.groupBy("file").count().collect()
+        }
         return (
             [f for f in m["files"] if self._dv_key(f) in hits],
             sum(hits.values()),
         )
 
     @staticmethod
+    def _keeps_id(
+        id_col: str, key_cols: list[str], order_cols: list[str]
+    ) -> Column:
+        """True on the ONE row of each (id, key columns) group that keeps
+        an inherited row id. Duplicate SOURCE keys multiply the
+        post-images of one matched pre-image, and every copy would
+        inherit the same id — breaking row-id lifetime uniqueness and
+        making a later rewrite-only optimize emit phantom keyless
+        change-feed updates (ADVICE r12).
+
+        One ``row_number`` window ordered by the full-row hash of
+        ``order_cols``: the first row (smallest hash, so reruns pick the
+        same post-image) wins. An inherited id names one target row,
+        hence one key, so the winner is the one an id-only window picks;
+        the key columns spread NULL-id inserts across tasks instead of
+        funnelling them into one. Partitioning by key alone would be
+        wrong for :meth:`merge_when`: a target holding one key several
+        times carries several ids under that key, and each keeps its
+        own. The window shuffles and hashes every row it sees, so
+        callers apply it only to rows that can share an id; the other
+        rows of a group get a NULL id, i.e. they become plain inserts
+        in the keyless feed."""
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy(id_col, *key_cols).orderBy(
+            F.xxhash64(F.to_json(F.struct(*order_cols)))
+        )
+        return F.row_number().over(w) == 1
+
+    @staticmethod
     def _inherit_ids(
         df: DataFrame, matched: DataFrame, key_cols: list[str],
-        order_cols: list[str],
-    ) -> DataFrame:
+        order_cols: list[str], survivors: DataFrame | None = None,
+    ) -> tuple[DataFrame, Observation]:
         """Row tracking for upserted rows: a source row whose key matched
         INHERITS the matched pre-image's row id as ``__row_id`` (the
         Delta MERGE contract — an update keeps its row id, so a keyless
@@ -3813,71 +3851,42 @@ class VersionedTable:
         time. ``min(__rid)`` per key: duplicate target keys (no
         uniqueness constraint exists) must not MULTIPLY the source rows
         — dup-key pre-images collapse into one post-image, which
-        inherits the smallest matched id. ``__hit`` marks matched rows;
-        with :meth:`_dedupe_inherited_ids`'s ``__first`` it counts the
-        matched keys (callers drop both)."""
-        old_ids = (
-            matched.groupBy(*key_cols)
-            .agg(F.min("__rid").alias("__row_id"))
-            .withColumn("__hit", F.lit(True))
-        )
-        return VersionedTable._dedupe_inherited_ids(
-            df.join(old_ids, on=key_cols, how="left"),
-            "__row_id",
-            key_cols,
-            order_cols,
-        )
+        inherits the smallest matched id; duplicate source keys keep it
+        on one row (:meth:`_keeps_id`).
 
-    @staticmethod
-    def _observe_matched_keys(df: DataFrame) -> tuple[DataFrame, Observation]:
-        """``df`` (the frame a write is about to run on) with the count
-        of matched KEYS — rows flagged ``__hit`` by :meth:`_inherit_ids`
-        that won their :meth:`_dedupe_inherited_ids` group — riding the
-        write as an ``Observation`` named ``keys``; the flag columns are
-        dropped. Observe the frame the action runs on: an Observation
-        registers with its frame's session, a ``foreachBatch`` source
-        lives in a cloned session, and an Observation on a frame of the
-        other session is never fulfilled (``get`` blocks forever)."""
+        Returns the frame to write — ``survivors`` (rows already
+        carrying their own ``__row_id``) first when given, then ``df`` —
+        and an ``Observation`` whose ``keys`` counts the matched KEYS:
+        the post-images that kept an inherited id's group. It rides the
+        write, so it sits on the frame the action runs on: an
+        Observation registers with its frame's session, a
+        ``foreachBatch`` source lives in a cloned session, and an
+        Observation on a frame of the other session is never fulfilled
+        (``get`` blocks forever)."""
+        old_ids = matched.groupBy(*key_cols).agg(
+            F.min("__rid").alias("__row_id"), F.lit(True).alias("__hit")
+        )
+        keeps = VersionedTable._keeps_id("__row_id", key_cols, order_cols)
+        out = (
+            df.join(old_ids, on=key_cols, how="left")
+            .withColumn("__keeps", keeps)
+            .select(
+                *df.columns,
+                F.when(F.col("__keeps"), F.col("__row_id")).alias(
+                    "__row_id"
+                ),
+                (F.col("__hit") & F.col("__keeps")).alias("__updated"),
+            )
+        )
+        if survivors is not None:
+            out = survivors.withColumn("__updated", F.lit(False)).unionByName(
+                out
+            )
         ob = Observation()
-        df = df.observe(
-            ob,
-            F.count(F.when(F.col("__hit") & F.col("__first"), 1)).alias(
-                "keys"
-            ),
+        out = out.observe(
+            ob, F.count(F.when(F.col("__updated"), 1)).alias("keys")
         )
-        return df.drop("__hit", "__first"), ob
-
-    @staticmethod
-    def _dedupe_inherited_ids(
-        df: DataFrame, id_col: str, key_cols: list[str],
-        order_cols: list[str],
-    ) -> DataFrame:
-        """Keep each inherited row id on exactly ONE output row.
-        Duplicate SOURCE keys multiply the post-images of one matched
-        pre-image, and every copy would inherit the same id — breaking
-        row-id lifetime uniqueness and making a later rewrite-only
-        optimize emit phantom keyless change-feed updates (ADVICE r12).
-
-        One ``row_number`` window partitioned by (id, key columns),
-        ordered by the full-row hash of ``order_cols``: the first row of
-        each group (smallest hash, so reruns pick the same post-image)
-        keeps the id and the rest get NULL, i.e. they become plain
-        inserts in the keyless feed. An inherited id names one target
-        row, hence one key, so the winner is the one an id-only window
-        picks; the key columns spread NULL-id inserts across tasks
-        instead of funnelling them into one. Partitioning by key alone
-        would be wrong for :meth:`merge_when`: a target holding one key
-        several times carries several ids under that key, and each
-        keeps its own. The boolean ``__first`` marks each group's
-        winner; callers count with it and drop it."""
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(id_col, *key_cols).orderBy(
-            F.xxhash64(F.to_json(F.struct(*order_cols)))
-        )
-        return df.withColumn(
-            "__first", F.row_number().over(w) == 1
-        ).withColumn(id_col, F.when(F.col("__first"), F.col(id_col)))
+        return out.drop("__updated"), ob
 
     def merge(
         self, source: DataFrame, key_cols: list[str],
@@ -3956,11 +3965,8 @@ class VersionedTable:
                 )
                 .withColumnRenamed("__rid", "__row_id")
             )
-            incoming = self._inherit_ids(
-                incoming, matched, key_cols, current_cols
-            )
-            rewritten, ob = self._observe_matched_keys(
-                survivors.unionByName(incoming, allowMissingColumns=True)
+            rewritten, ob = self._inherit_ids(
+                incoming, matched, key_cols, current_cols, survivors
             )
         else:
             rewritten = incoming.withColumn(
@@ -4112,18 +4118,22 @@ class VersionedTable:
                 )
         # row tracking: updated/kept rows keep the target row's id
         # (__rid from the t-side of the join); inserts carry NULL and
-        # draw fresh ids from the commit's base range at read time
+        # draw fresh ids from the commit's base range at read time. Only
+        # matched rows can share an id (duplicate source keys repeat a
+        # target row), so only they go through the dedupe window
         out_cols.append(F.col("__rid").alias("__row_id"))
-        rewritten = self._dedupe_inherited_ids(
-            classified.where(
-                F.col("__action").isin(
-                    "update", "keep_matched", "keep", "insert"
-                )
-            ).select(*out_cols),
-            "__row_id",
-            key_cols,
-            current_cols,
-        ).drop("__first")
+
+        def rows(*actions):
+            return classified.where(F.col("__action").isin(*actions)).select(
+                *out_cols
+            )
+
+        keeps = self._keeps_id("__row_id", key_cols, current_cols)
+        rewritten = (
+            rows("update", "keep_matched")
+            .withColumn("__row_id", F.when(keeps, F.col("__row_id")))
+            .unionByName(rows("keep", "insert"))
+        )
         # persistent checks validate the rows actually WRITTEN (clause
         # filters may drop violating source rows — those are fine)
         self._enforce_table_checks(rewritten, prev)
@@ -4228,8 +4238,8 @@ class VersionedTable:
             # the appended post-image of a matched key inherits the
             # vectored pre-image's id (keyless CDF pairs them as one
             # update)
-            appended, ob = self._observe_matched_keys(
-                self._inherit_ids(appended, matched, key_cols, current_cols)
+            appended, ob = self._inherit_ids(
+                appended, matched, key_cols, current_cols
             )
         else:
             appended = appended.withColumn(

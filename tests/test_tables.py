@@ -1304,6 +1304,34 @@ def test_partition_values_with_escaped_chars_prune_correctly(spark, table):
     assert got == [1]
 
 
+def test_merge_matches_rows_in_escaped_partition_dirs(spark, table):
+    """A hive-escaped partition directory (``00%3A00``) reads back from
+    ``_metadata.file_path`` percent-encoded again (``00%253A00``); the
+    merge verbs must still find the file holding a matched key, or the
+    pre-image survives next to the post-image and the update counts as
+    an insert."""
+    df = spark.createDataFrame(
+        [Row(k=1, v=1, ts="2020-01-01 00:00:00"),
+         Row(k=2, v=2, ts="2020-01-02 00:00:00")]
+    )
+    table.commit_partitioned(df, [("p_ts", "ts")])
+    rep = table.merge(
+        spark.createDataFrame([Row(k=1, v=10, ts="2020-01-01 00:00:00")]),
+        ["k"],
+    )
+    assert (rep["rows_updated"], rep["rows_inserted"]) == (1, 0)
+    assert rep["files_rewritten"] == 1
+    rep = table.merge_when(
+        spark.createDataFrame([Row(k=2, v=20, ts="2020-01-02 00:00:00")]),
+        ["k"],
+    )
+    assert (rep["rows_updated"], rep["rows_inserted"]) == (1, 0)
+    assert rep["files_rewritten"] == 1
+    assert sorted((r.k, r.v) for r in table.snapshot().collect()) == [
+        (1, 10), (2, 20)
+    ]
+
+
 def test_bloom_probe_matches_spark_cast_for_nonint_types(spark, table):
     """A double column indexed under Spark's string rendering must be
     probe-able with a Python int/float — representation mismatches would
